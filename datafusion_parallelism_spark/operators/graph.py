@@ -56,54 +56,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+# checkpoint_pinned keeps a checkpoint's partitioning/ordering metadata
+# under AQE — the property every loop-invariant table here depends on —
+# and presorted sorts a loop-invariant table by its loop join key before
+# that checkpoint, so iteration-time SortMergeJoins skip re-sorting it.
+from ..plans.shaping import checkpoint_pinned as _ckpt_pinned
+from ..plans.shaping import kernel_gate
+from ..plans.shaping import presorted as _presorted
+
 #: One shuffle partition per this many iteration-state rows (floor 4,
 #: ceiling the session conf) — the same sizing rule the round-4 conf flip
 #: used, now applied per-shuffle-point.
 _STATE_ROWS_PER_PARTITION = 50_000
 
-#: Edge-count ceiling for the single-task PageRank kernel (round 11).
-#: Below it, the whole power iteration runs inside ONE ``mapInArrow``
-#: task over the materialized edge table instead of 10 distributed
-#: join+aggregate rounds.  Rationale (guide §1.3 napkin math): a
-#: distributed iteration moves ~|E| rows through an exchange per
-#: iteration (10·|E| total) plus pays ~2 stage walls + a checkpoint per
-#: round — measured 0.26–0.29 s/iteration of almost pure scheduling
-#: overhead at sf0.1 (1.17M edges, ~80 ms of task time per round;
-#: docs/pagerank_decomp_r11.json) — while the kernel moves the edges
-#: ONCE and runs the 10 gather/scatter passes in vectorized NumPy
-#: (~20 ms each).  4M edges ≈ 24 B/edge ≈ 100 MB of task arrays, well
-#: inside one task's memory share on any sane executor; above the
-#: ceiling the distributed loop (the 100 TB path) is unchanged.
-#: Kill-switch: spark.graft.pagerank_local_max_edges=0.
-_PAGERANK_KERNEL_MAX_EDGES = 4_000_000
-
-
 def _state_parts(m: int, conf_parts: int) -> int:
     return max(4, min(conf_parts, -(-m // _STATE_ROWS_PER_PARTITION)))
-
-
-def _presorted(df: DataFrame, *keys: str) -> DataFrame:
-    """Sort a loop-invariant table by its loop join key before its
-    checkpoint so iteration-time SortMergeJoins can skip re-sorting it.
-    Only effective through :func:`_ckpt_pinned` — a plain localCheckpoint
-    under AQE erases the stored ordering (and partitioning), which is
-    exactly why the r9 presort left pagerank's 13 GB/iteration sort spill
-    unchanged at x256: the per-iteration SMJ re-sorted (and re-exchanged)
-    the edge table anyway.  Mechanism, evidence and kill-switch
-    (spark.graft.presort=false): plans/shaping.presorted."""
-    from ..plans.shaping import presorted
-
-    return presorted(df, *keys)
-
-
-def _ckpt_pinned(df: DataFrame) -> DataFrame:
-    """Eager localCheckpoint that keeps partitioning/ordering metadata
-    under AQE (plans/shaping.checkpoint_pinned) — the property every
-    loop-invariant table here depends on.  Kill-switch
-    spark.graft.pin=false."""
-    from ..plans.shaping import checkpoint_pinned
-
-    return checkpoint_pinned(df)
 
 
 def _sized(df: DataFrame, parts: int, conf_parts: int, *keys: str) -> DataFrame:
@@ -268,13 +235,6 @@ def _cc_arrow(und: DataFrame, max_iter: int) -> DataFrame:
     )
 
 
-#: Edge-count ceiling for the single-task connected-components kernel —
-#: same arithmetic and rationale as _PAGERANK_KERNEL_MAX_EDGES (the CC
-#: loop additionally runs a VARIABLE number of driver-synced iterations,
-#: up to max_iter + 1 jobs).  Kill-switch: spark.graft.cc_local_max_edges=0.
-_CC_KERNEL_MAX_EDGES = 4_000_000
-
-
 def connected_components(
     edges: DataFrame,
     max_iter: int = 20,
@@ -329,14 +289,8 @@ def connected_components(
     # graph) runs inside ONE Arrow task with the identical integer
     # schedule, including the non-convergence raise — surfaced here
     # driver-side via an eager materialization so the contract (raise
-    # from THIS call, not a later action) is preserved.  Kill-switch:
-    # spark.graft.cc_local_max_edges=0.
-    cc_kernel_max = int(
-        spark.conf.get(
-            "spark.graft.cc_local_max_edges", str(_CC_KERNEL_MAX_EDGES)
-        )
-    )
-    if checkpoint and m <= cc_kernel_max:
+    # from THIS call, not a later action) is preserved.
+    if checkpoint and kernel_gate(spark, "cc", m):
         labeled = _cc_arrow(und, max_iter)
         try:
             labeled = labeled.localCheckpoint(eager=True)
@@ -525,12 +479,6 @@ def pagerank(
     spark = edges.sparkSession
     conf_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     e = edges.select(F.col(u).alias("src"), F.col(v).alias("dst"))
-    kernel_max = int(
-        spark.conf.get(
-            "spark.graft.pagerank_local_max_edges",
-            str(_PAGERANK_KERNEL_MAX_EDGES),
-        )
-    )
     # Bounded-ahead kernel path (round 11): when the caller can bound the
     # edge count from metadata (an UPPER bound, so the "small" decision is
     # never wrong on a big graph), skip the distributed loop's whole setup
@@ -538,9 +486,8 @@ def pagerank(
     # checkpoint — and run the entire power iteration as ONE job: the
     # derivation's stages feed a keyless single-partition exchange into
     # the Arrow kernel, which computes 1/outdeg itself (the identical
-    # IEEE division).  See _PAGERANK_KERNEL_MAX_EDGES for the sizing
-    # argument; spark.graft.pagerank_local_max_edges=0 disables.
-    if approx_edge_bound is not None and approx_edge_bound <= kernel_max:
+    # IEEE division).  Sizing argument: plans/shaping.KERNEL_GATES.
+    if kernel_gate(spark, "pagerank", approx_edge_bound):
         # Duplicate edges (if any) collapse INSIDE the kernel — a NumPy
         # unique on index pairs instead of a distributed distinct
         # exchange the kernel would make redundant.
@@ -571,27 +518,14 @@ def pagerank(
     # aggregate, so shuffle volume and the contribution SUM are
     # unchanged; per-dst sum ORDER changes with row order, which the
     # oracle's 1e-7 rounding has always absorbed (same tolerance class as
-    # DuckDB's own order).  Kill-switch: spark.graft.pagerank_grouped=
-    # false restores the row-per-edge loop.
-    grouped = (
-        spark.conf.get("spark.graft.pagerank_grouped", "true") != "false"
+    # DuckDB's own order).
+    e_loop = (
+        e.repartition(F.col("src"))
+        .groupBy("src")
+        .agg(F.collect_list("dst").alias("dsts"))
+        .select("src", "dsts", (F.lit(1.0) / F.size("dsts")).alias("w"))
     )
-    e2 = e.repartition(F.col("src"))
-    if grouped:
-        e_loop = (
-            e2.groupBy("src")
-            .agg(F.collect_list("dst").alias("dsts"))
-            .select(
-                "src", "dsts", (F.lit(1.0) / F.size("dsts")).alias("w")
-            )
-        )
-        m_expr = F.coalesce(F.sum(F.size("dsts")), F.lit(0)).alias("m")
-    else:
-        outdeg = e2.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-        e_loop = e2.join(outdeg, "src").select(
-            "src", "dst", (F.lit(1.0) / F.col("outdeg")).alias("w")
-        )
-        m_expr = F.count(F.lit(1)).alias("m")
+    m_expr = F.coalesce(F.sum(F.size("dsts")), F.lit(0)).alias("m")
     if checkpoint:
         obs_m = Observation()
         e_loop = _ckpt_pinned(
@@ -605,15 +539,14 @@ def pagerank(
     # ceiling runs every iteration inside one Arrow task — no node
     # checkpoint, no per-iteration jobs, identical math (see
     # _pagerank_arrow).  The distributed loop below stays the at-scale
-    # path; spark.graft.pagerank_local_max_edges=0 disables the kernel
-    # for paired A/Bs.
-    if m <= kernel_max:
-        rows = (
-            e_loop.select("src", F.explode("dsts").alias("dst"), "w")
-            if grouped
-            else e_loop
-        )
+    # path.
+    if kernel_gate(spark, "pagerank", m):
+        rows = e_loop.select("src", F.explode("dsts").alias("dst"), "w")
         return _pagerank_arrow(rows, damping, iterations, normalized=True)
+    if m == 0:
+        # Empty graph with the kernel gated off: no nodes, so no ranks
+        # (the kernel's answer too) — and no 1/n below.
+        return e_loop.select(F.col("src").alias("node"), F.lit(0.0).alias("rank"))
     # Iteration-state width: see module docstring (_sized) — one partition
     # per ~50k state rows, floor 4, ceiling the session conf (no-op at real
     # scale), applied per shuffle point instead of the r4 session-conf flip.
@@ -627,11 +560,7 @@ def pagerank(
             e_loop.repartition(parts, "src").transform(_presorted, "src")
         )
 
-    dst_nodes = (
-        e_loop.select(F.explode("dsts").alias("node"))
-        if grouped
-        else e_loop.select(F.col("dst").alias("node"))
-    )
+    dst_nodes = e_loop.select(F.explode("dsts").alias("node"))
     nodes = (
         _sized(
             e_loop.select(F.col("src").alias("node")).union(dst_nodes),
@@ -662,16 +591,10 @@ def pagerank(
     # deep without checkpointing ranks at all.
     ranks = nodes.withColumn("rank", F.lit(1.0 / n))
     for _ in range(iterations):
-        joined = e_loop.join(ranks, e_loop["src"] == ranks["node"])
-        if grouped:
-            rows = joined.select(
-                F.explode("dsts").alias("dst"),
-                (F.col("rank") * F.col("w")).alias("c"),
-            )
-        else:
-            rows = joined.select(
-                "dst", (F.col("rank") * F.col("w")).alias("c")
-            )
+        rows = e_loop.join(ranks, e_loop["src"] == ranks["node"]).select(
+            F.explode("dsts").alias("dst"),
+            (F.col("rank") * F.col("w")).alias("c"),
+        )
         contrib = (
             _sized(rows, parts, conf_parts, "dst")
             .groupBy("dst")
@@ -702,13 +625,6 @@ def pagerank(
             ).alias("rank"),
         )
     return ranks
-
-
-#: Edge-count ceiling for the single-task triangle kernel.  Wedge volume
-#: is Σ outdeg² ≤ m^1.5 under the compact-forward orientation; the kernel
-#: streams wedges in O(m) memory per gap step, so the ceiling only bounds
-#: TIME (~m^1.5 vectorized ops).  Kill-switch: spark.graft.tri_local_max_edges=0.
-_TRI_KERNEL_MAX_EDGES = 200_000
 
 
 def _tri_arrow(edges: DataFrame) -> DataFrame:
@@ -808,8 +724,7 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     SORTED the whole Σ outdeg² wedge table (the r9 ledger's 29 GB x256
     memory spill).  An SHJ build partition holds |E|/width rows, which
     AQE's advisory sizing keeps bounded at any corpus size; the wedge
-    side is never sorted anywhere in the plan.  Kill-switch for paired
-    A/Bs: spark.graft.tri_shj=false (SMJ planner default).
+    side is never sorted anywhere in the plan.
 
     Edge materialization + small-graph kernel (round 11): the edge list
     has THREE consumers below (two degree projections + the orientation
@@ -819,21 +734,13 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     checkpoint runs the (expensive) edge derivation exactly once, and the
     measured count gates the single-task NumPy kernel (_tri_arrow) for
     small graphs — same algorithm, exact integer counts, one task instead
-    of ~6 stages.  Kill-switch: spark.graft.tri_local_max_edges=0
-    restores the round-10 shape byte-for-byte."""
-    spark = edges.sparkSession
-    tri_max = int(
-        spark.conf.get(
-            "spark.graft.tri_local_max_edges", str(_TRI_KERNEL_MAX_EDGES)
-        )
+    of ~6 stages."""
+    obs = Observation()
+    edges = edges.observe(obs, F.count(F.lit(1)).alias("m")).localCheckpoint(
+        eager=True
     )
-    if tri_max > 0:
-        obs = Observation()
-        edges = edges.observe(
-            obs, F.count(F.lit(1)).alias("m")
-        ).localCheckpoint(eager=True)
-        if obs.get["m"] <= tri_max:
-            return _tri_arrow(edges)
+    if kernel_gate(edges.sparkSession, "tri", obs.get["m"]):
+        return _tri_arrow(edges)
     deg = (
         edges.select(F.col("u").alias("n"))
         .union(edges.select("v"))
@@ -867,15 +774,10 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
         F.when(F.col("ku") < F.col("kv"), F.col("u")).otherwise(F.col("v")).alias("src"),
         F.when(F.col("ku") < F.col("kv"), F.col("v")).otherwise(F.col("u")).alias("dst"),
     ).localCheckpoint(eager=False)
-    shj = (
-        edges.sparkSession.conf.get("spark.graft.tri_shj", "true") != "false"
-    )
-    e1, e2 = o.alias("e1"), o.alias("e2")
+    e1, e2 = o.alias("e1"), o.alias("e2").hint("shuffle_hash")
     closing = o.select(
         F.least("src", "dst").alias("cu"), F.greatest("src", "dst").alias("cv")
-    )
-    if shj:
-        e2, closing = e2.hint("shuffle_hash"), closing.hint("shuffle_hash")
+    ).hint("shuffle_hash")
     tri = (
         e1.join(
             e2,

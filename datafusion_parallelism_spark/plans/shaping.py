@@ -15,6 +15,9 @@ statistics (src/lib.rs:526-547) and a ``replacement_required`` mode
 These helpers are how tests/test_plan_shapes.py pins optimizer behavior
 (EXISTS → LeftSemi, outer-join elimination, broadcast vs shuffled-hash,
 pushdown, pruning, codegen) the way the reference's integration tests do.
+
+:func:`kernel_gate` is the one size gate between each single-task
+Arrow/NumPy kernel and its distributed plan.
 """
 
 from __future__ import annotations
@@ -130,12 +133,7 @@ def presorted(df: DataFrame, *keys: str) -> DataFrame:
     checkpoint so the metadata is captured; EnsureRequirements then
     elides the per-iteration Sort (and Exchange) under SortMergeJoin /
     SortAggregate consumers of the loop-INVARIANT table at every scale.
-
-    Kill-switch for paired A/Bs: spark.graft.presort=false (a Spark conf
-    so probe.py --paired-conf can drive it).
     """
-    if df.sparkSession.conf.get("spark.graft.presort", "true") == "false":
-        return df
     return df.sortWithinPartitions(*keys)
 
 
@@ -170,16 +168,57 @@ def checkpoint_pinned(df: DataFrame) -> DataFrame:
     The flip is session-global for the duration of the job; engine
     sessions run one query at a time (driver/bench), and a concurrent
     planner caught in the window would merely plan non-adaptively
-    (correct, possibly slower).
-
-    Kill-switch for paired A/Bs: spark.graft.pin=false (falls back to a
-    plain eager localCheckpoint)."""
+    (correct, possibly slower)."""
     conf = df.sparkSession.conf
-    if conf.get("spark.graft.pin", "true") == "false":
-        return df.localCheckpoint(eager=True)
     prev = conf.get("spark.sql.adaptive.enabled")
     conf.set("spark.sql.adaptive.enabled", "false")
     try:
         return df.localCheckpoint(eager=True)
     finally:
         conf.set("spark.sql.adaptive.enabled", prev)
+
+
+#: The single-task kernel gates: gate → (Spark conf, default ceiling).
+#: Below its ceiling a gated operator runs as ONE Arrow/NumPy task; above
+#: it the distributed plan (the 100 TB path) runs unchanged.  Setting a
+#: conf to 0 always takes the distributed path (:func:`kernel_gate`).
+#:
+#: * ``pagerank`` (edges): a distributed iteration moves ~|E| rows through
+#:   an exchange (10·|E| total) and pays ~2 stage walls + a checkpoint per
+#:   round — measured 0.26–0.29 s/iteration of almost pure scheduling
+#:   overhead at sf0.1 (1.17M edges, ~80 ms of task time per round) — while
+#:   the kernel moves the edges ONCE and runs the 10 gather/scatter passes
+#:   in vectorized NumPy (~20 ms each).  4M edges ≈ 24 B/edge ≈ 100 MB of
+#:   task arrays, well inside one task's memory share on any sane executor.
+#: * ``cc`` (edges): the same arithmetic; the distributed loop additionally
+#:   runs a VARIABLE number of driver-synced iterations (up to max_iter + 1
+#:   jobs).
+#: * ``tri`` (edges): wedge volume is Σ outdeg² ≤ m^1.5 under the
+#:   compact-forward orientation; the kernel streams wedges in O(m) memory
+#:   per gap step, so the ceiling only bounds TIME (~m^1.5 vectorized ops).
+#: * ``pq_train`` (subvector rows): Lloyd training is sequential (each
+#:   iteration's assignment needs the previous codebook), so the
+#:   distributed form costs one driver-synced job per iteration plus a seed
+#:   job — ~0.3 s of scheduling floor each at toy/mid scale while the math
+#:   is microseconds.  Below the ceiling the whole fit runs in one task
+#:   (~24 B/row of NumPy arrays, ≈100 MB at the ceiling) and ships back only
+#:   the M·K codebook.
+#: * ``km_train`` (long-format dims rows): the same rationale and
+#:   arithmetic as ``pq_train``.
+KERNEL_GATES = {
+    "pagerank": ("spark.graft.pagerank_local_max_edges", 4_000_000),
+    "cc": ("spark.graft.cc_local_max_edges", 4_000_000),
+    "tri": ("spark.graft.tri_local_max_edges", 200_000),
+    "pq_train": ("spark.graft.pq_local_train_max", 4_000_000),
+    "km_train": ("spark.graft.km_local_train_max", 4_000_000),
+}
+
+
+def kernel_gate(spark: SparkSession, gate: str, bound: int | None) -> bool:
+    """True iff the single-task kernel of ``gate`` (a KERNEL_GATES key)
+    should run for an input of at most ``bound`` rows.  An unknown bound
+    (None) or a ceiling of 0 always selects the distributed path, so 0 is
+    a kill-switch even for an empty input."""
+    conf, default = KERNEL_GATES[gate]
+    ceiling = int(spark.conf.get(conf, str(default)))
+    return bound is not None and ceiling > 0 and bound <= ceiling

@@ -45,6 +45,7 @@ from ..functions.text import (
     word_shingles,
 )
 from ..functions.vectors import as_double, cosine, norm
+from ..plans.shaping import kernel_gate
 from ..session import load, spread_for_compute
 from .registry import query
 
@@ -287,6 +288,11 @@ def _pair_parallelism(spark: SparkSession) -> int:
     )
 
 
+#: Pair-stream exchange width as a multiple of the session width (see
+#: _stream_pairs).
+_PAIR_WIDTH_FACTOR = 4
+
+
 def _stream_pairs(pairs: DataFrame) -> DataFrame:
     """Route a Σ df(key)² candidate-pair stream through a pair-keyed
     exchange BEFORE its count aggregate (see winnow_pair_counts for the
@@ -298,9 +304,9 @@ def _stream_pairs(pairs: DataFrame) -> DataFrame:
     With the exchange below the aggregate, the join stage hash-routes
     pair rows straight to the shuffle and each reduce task counts its
     own pairs over an AQE-coalesced input — bounded state at any corpus
-    size.  Kill-switch for paired A/Bs: spark.graft.pair_stream=false.
+    size.
 
-    The exchange width is EXPLICIT at pair_width_factor × session width
+    The exchange width is EXPLICIT at _PAIR_WIDTH_FACTOR × session width
     (r10): a column-only repartition inherits spark.sql.shuffle.partitions,
     which is sized from INPUT bytes — but the pair stream is Σ df²,
     superlinear in input, so the reduce-side count aggregate's hash map
@@ -308,17 +314,12 @@ def _stream_pairs(pairs: DataFrame) -> DataFrame:
     30 GB aggregate peak ≈ 0.9 GB/task, 46 GB memory-spill under
     32-concurrent-task pool contention).  AQE can coalesce an oversized
     exchange but can never SPLIT an undersized one, so the width must
-    start data-ahead; the ×4 default buys one decade of pair-volume
-    growth and costs only smaller tasks where the stream is small.
-    Kill-switch: spark.graft.pair_width_factor=0 restores the
-    column-only (session-width, AQE-coalescible) exchange."""
+    start data-ahead; the ×4 buys one decade of pair-volume growth and
+    costs only smaller tasks where the stream is small."""
     spark = pairs.sparkSession
-    if spark.conf.get("spark.graft.pair_stream", "true") == "false":
-        return pairs
-    factor = int(spark.conf.get("spark.graft.pair_width_factor", "4"))
-    if factor <= 0:
-        return pairs.repartition("doc_a", "doc_b")
-    return pairs.repartition(factor * _pair_parallelism(spark), "doc_a", "doc_b")
+    return pairs.repartition(
+        _PAIR_WIDTH_FACTOR * _pair_parallelism(spark), "doc_a", "doc_b"
+    )
 
 
 def _blocked_index_from_arrays(arrays: DataFrame, n_part: int) -> DataFrame:
@@ -347,12 +348,8 @@ def _shared_shingle_arrays(d: DataFrame) -> DataFrame:
     pass at ~23 s of the 90 s total; sharing it through a lazy
     localCheckpoint saves the second execution at the cost of
     materializing the gram arrays (MEMORY_AND_DISK, spills instead of
-    OOM).  ``SPARK_GRAFT_JACCARD_NO_SHARE=1`` restores the recompute
-    shape — kept as the measurement kill-switch for paired A/Bs."""
-    arrays = _doc_shingles(d)
-    if os.environ.get("SPARK_GRAFT_JACCARD_NO_SHARE", "") == "1":
-        return arrays
-    return arrays.localCheckpoint(eager=False)
+    OOM)."""
+    return _doc_shingles(d).localCheckpoint(eager=False)
 
 
 #: Stop-shingle document-frequency ceiling for the pair self-joins.  The
@@ -641,12 +638,7 @@ def winnow_pair_counts(
     # pair rows straight to the shuffle (hash-route, no sort, no map),
     # and each reduce task counts only its own pairs over an
     # AQE-coalesced input — bounded state at any corpus size.
-    # Kill-switch for paired A/Bs: spark.graft.winnow_stream=false.
-    if (
-        pairs.sparkSession.conf.get("spark.graft.winnow_stream", "true")
-        != "false"
-    ):
-        pairs = pairs.repartition("doc_a", "doc_b")
+    pairs = pairs.repartition("doc_a", "doc_b")
     return pairs.groupBy("doc_a", "doc_b").agg(
         F.count(F.lit(1)).alias("shared_fps")
     )
@@ -1901,19 +1893,8 @@ def corpus_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     dominant cost) ran over every document TWICE, once per branch.
     Filtering the scan first pushes ``source`` into parquet
     (PushedFilters) and each document is shingled exactly once, in
-    exactly one branch; the doc_id attach join disappears entirely.
-    Kill-switch for paired A/Bs: ``spark.graft.decon_split=false``
-    restores the shingle-then-filter shape."""
+    exactly one branch; the doc_id attach join disappears entirely."""
     d = _docs_spread(spark, sf_dir)
-    if spark.conf.get("spark.graft.decon_split", "true") == "false":
-        sh = _shingle_table(d).join(d.select("doc_id", "source"), "doc_id")
-        bench = sh.filter(F.col("source") == "src1").select("s").distinct()
-        return (
-            sh.filter(F.col("source") != "src1")
-            .join(F.broadcast(bench), "s")
-            .groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("n_shared"))
-        )
     bench = (
         _shingle_table(d.filter(F.col("source") == "src1")).select("s").distinct()
     )
@@ -2875,32 +2856,15 @@ def _pq_subv(
     return out
 
 
-def _pq_arrow_on(spark: SparkSession) -> bool:
-    """Round-11 default: PQ assignment runs as a vectorized Arrow kernel
-    (see _pq_assign_arrow).  Kill-switch spark.graft.pq_arrow=false
-    restores the broadcast-join + min(struct) formulation."""
-    return spark.conf.get("spark.graft.pq_arrow", "true") != "false"
-
-
-#: Subvector-row ceiling for ONE-TASK Lloyd training (round 11).  The
-#: training loop is sequential by nature (each iteration's assignment
-#: needs the previous codebook), so the distributed form costs one
-#: driver-synced job per iteration plus a seed job — ~0.3 s of scheduling
-#: floor each at any toy/mid scale while the actual math is microseconds.
-#: Below this ceiling the whole fit runs inside one executor task
-#: (~24 B/row of NumPy arrays, ≈100 MB at the ceiling) and ships back
-#: only the M·K codebook; above it the per-iteration distributed jobs
-#: remain (the 100 TB posture — at that scale each job does real work).
-#: Kill-switch: spark.graft.pq_local_train_max=0.
-_PQ_LOCAL_TRAIN_MAX_SUBV = 4_000_000
-
-
 def _round_half_up(x, scale: int):
-    """Exact replica of Spark's ROUND (BigDecimal HALF_UP on the double's
-    exact binary value) for a NumPy array: vectorized half-away-from-zero
-    fast path, with a Decimal fallback for values within 1e-9 of a
-    rounding boundary where the ``x * 10^scale`` product's own rounding
-    could disagree with the exact decimal expansion."""
+    """Replica of Spark's ROUND on doubles for a NumPy array.  Spark rounds
+    HALF_UP on ``BigDecimal(Double.toString(x))`` — the SHORTEST decimal
+    that round-trips, not the double's exact binary value — so
+    round(2.675, 2) = 2.68 although the double is 2.67499999....
+    Vectorized half-away-from-zero fast path, with a Decimal fallback on
+    ``repr(x)`` (Python's shortest round-trip repr, as Double.toString)
+    for values within 1e-9 of a rounding boundary, where the
+    ``x * 10^scale`` product's own rounding could disagree."""
     import numpy as np
 
     p = 10.0 ** scale
@@ -2915,7 +2879,7 @@ def _round_half_up(x, scale: int):
         q = Decimal(1).scaleb(-scale)
         for i in np.nonzero(near)[0]:
             out[i] = float(
-                Decimal(float(x[i])).quantize(q, rounding=ROUND_HALF_UP)
+                Decimal(repr(float(x[i]))).quantize(q, rounding=ROUND_HALF_UP)
             )
     return out
 
@@ -2988,18 +2952,21 @@ def _pq_train_local(subv: DataFrame) -> DataFrame:
 
 
 def _pq_anchor_arrays(rows):
-    """Codebook rows (j, aid, a1, a2) → three [M, K] NumPy arrays with the
-    K anchors of each subspace COLUMN-SORTED BY aid, so ``np.argmin``'s
+    """Codebook rows (j, aid, a1, a2) → three [M, k_eff] NumPy arrays with
+    the anchors of each subspace COLUMN-SORTED BY aid, so ``np.argmin``'s
     first-minimum tie rule coincides with the oracle's MIN(aid)-among-
-    minima tie rule."""
+    minima tie rule.  k_eff is the per-subspace anchor count actually
+    present (< _PQ_K on a corpus of fewer than _PQ_K vectors): padding to
+    _PQ_K would add phantom anchors at the origin to every argmin."""
     import numpy as np
 
     per_j: dict[int, list] = {}
     for r in rows:
         per_j.setdefault(r[0], []).append((r[1], r[2], r[3]))
-    aid = np.zeros((_PQ_M, _PQ_K), dtype=np.int64)
-    a1 = np.zeros((_PQ_M, _PQ_K), dtype=np.float64)
-    a2 = np.zeros((_PQ_M, _PQ_K), dtype=np.float64)
+    k_eff = max((len(lst) for lst in per_j.values()), default=0)
+    aid = np.zeros((_PQ_M, k_eff), dtype=np.int64)
+    a1 = np.zeros((_PQ_M, k_eff), dtype=np.float64)
+    a2 = np.zeros((_PQ_M, k_eff), dtype=np.float64)
     for j, lst in per_j.items():
         lst.sort()
         for k, (i, x1, x2) in enumerate(lst):
@@ -3079,7 +3046,7 @@ def _pq_trained_anchors_arrow(spark: SparkSession, subv: DataFrame, seed: DataFr
         )
         upd = {(r[0], r[1]): (r[2], r[3]) for r in means}
         for j in range(_PQ_M):
-            for k in range(_PQ_K):
+            for k in range(aid.shape[1]):
                 m = upd.get((j, int(aid[j, k])))
                 if m is not None:
                     a1[j, k] = m[0]
@@ -3087,38 +3054,27 @@ def _pq_trained_anchors_arrow(spark: SparkSession, subv: DataFrame, seed: DataFr
     rows = [
         (j, int(aid[j, k]), float(a1[j, k]), float(a2[j, k]))
         for j in range(_PQ_M)
-        for k in range(_PQ_K)
+        for k in range(aid.shape[1])
     ]
     return rows, (aid, a1, a2)
 
 
 def _pq_model(spark: SparkSession, vecs: DataFrame):
     """(subv, anch_df, anch_arrays): the checkpointed subvector table plus
-    the TRAINED codebook as a local DataFrame (for LUT broadcasts) and,
-    on the Arrow path, as [M,K] arrays for the assignment kernel
-    (``anch_arrays is None`` on the kill-switch path)."""
+    the TRAINED codebook as a local DataFrame (for LUT broadcasts) and as
+    [M, k_eff] arrays for the assignment kernel."""
+    counted: list = []
+    subv = _pq_subv(vecs, spark, count_into=counted)
+    if kernel_gate(spark, "pq_train", counted[0]):
+        # One-task fit; collecting the M·K codebook is the same
+        # constant-size model-artifact materialization the distributed
+        # loop already performs per iteration.
+        rows = [tuple(r) for r in _pq_train_local(subv).collect()]
+        arrays = _pq_anchor_arrays(rows)
+    else:
+        rows, arrays = _pq_trained_anchors_arrow(spark, subv, _pq_seed(subv))
     schema = "j int, aid long, a1 double, a2 double"
-    if _pq_arrow_on(spark):
-        counted: list = []
-        subv = _pq_subv(vecs, spark, count_into=counted)
-        local_max = int(
-            spark.conf.get(
-                "spark.graft.pq_local_train_max",
-                str(_PQ_LOCAL_TRAIN_MAX_SUBV),
-            )
-        )
-        if counted and counted[0] <= local_max:
-            # One-task fit; collecting the M·K codebook is the same
-            # constant-size model-artifact materialization the
-            # distributed loop already performs per iteration.
-            rows = [tuple(r) for r in _pq_train_local(subv).collect()]
-            arrays = _pq_anchor_arrays(rows)
-        else:
-            seed = _pq_seed(subv)
-            rows, arrays = _pq_trained_anchors_arrow(spark, subv, seed)
-        return subv, spark.createDataFrame(rows, schema=schema), arrays
-    subv = _pq_subv(vecs, spark)
-    return subv, _pq_trained_anchors(spark, subv, _pq_seed(subv)), None
+    return subv, spark.createDataFrame(rows, schema=schema), arrays
 
 
 def _pq_seed(subv: DataFrame) -> DataFrame:
@@ -3143,9 +3099,9 @@ def _pq_trained_anchors(spark: SparkSession, subv: DataFrame, seed: DataFrame):
     a model artifact of constant size (M·K rows ≈ 2k), so each update is
     collected and re-broadcast — the one legitimate driver materialization
     (same class as CC's convergence scalars); at 100 TB training would run
-    on a corpus sample with the identical plan.  Since round 11 this is
-    the spark.graft.pq_arrow=false kill-switch path; the default is
-    _pq_trained_anchors_arrow."""
+    on a corpus sample with the identical plan.  The product trains with
+    _pq_train_local / _pq_trained_anchors_arrow; this join formulation is
+    the reference the tests hold them to."""
     schema = "j int, aid long, a1 double, a2 double"
     anch = seed
     for _ in range(_PQ_ITERS):
@@ -3208,16 +3164,11 @@ def _pq_dists_from(subv: DataFrame, anch: DataFrame) -> DataFrame:
     )
 
 
-def _pq_dists(spark: SparkSession, vecs: DataFrame) -> DataFrame:
-    """Full distance table over the whole corpus (kill-switch path)."""
-    subv, anch, _ = _pq_model(spark, vecs)
-    return _pq_dists_from(subv, anch)
-
-
 def _pq_codes(dists: DataFrame) -> DataFrame:
     """(vec_id, j, code, dmin): nearest anchor per subspace; ties broken by
     smallest anchor id via lexicographic struct-min — the same tie rule the
-    oracle's MIN(aid)-among-minima join expresses."""
+    oracle's MIN(aid)-among-minima join expresses.  The join-formulation
+    reference for _pq_assign_arrow (tests)."""
     return (
         dists.groupBy("vec_id", "j")
         .agg(F.min(F.struct("d2", "aid")).alias("s"))
@@ -3255,14 +3206,10 @@ def vec_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     M-way min is a tiny grouped aggregation keyed by (vec_id, j).  Exactly
     the plan a 100 TB corpus wants: linear scan, zero data movement.
     Since round 11 the assignment map is the vectorized Arrow kernel
-    (_pq_assign_arrow) — no |corpus|·M·K row expansion; the kill-switch
-    spark.graft.pq_arrow=false restores the broadcast-join argmin."""
+    (_pq_assign_arrow) — no |corpus|·M·K row expansion."""
     e = load(spark, sf_dir, "embeddings")
-    subv, anch_df, arrays = _pq_model(spark, e)
-    if arrays is not None:
-        codes = _pq_assign_arrow(subv, *arrays, include_coords=False)
-    else:
-        codes = _pq_codes(_pq_dists_from(subv, anch_df))
+    subv, _, arrays = _pq_model(spark, e)
+    codes = _pq_assign_arrow(subv, *arrays, include_coords=False)
     return codes.groupBy("vec_id").agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("j", "code"))),
@@ -3316,21 +3263,14 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     composition."""
     e = load(spark, sf_dir, "embeddings")
     subv, anch_df, arrays = _pq_model(spark, e)
-    if arrays is not None:
-        # Corpus side: argmin via the Arrow kernel — no M·K expansion.
-        # Query side (the LUT) still needs the FULL per-anchor distance
-        # table, but only for the 10 query vectors: the Catalyst
-        # expression over the filtered subvector slice is trivial.
-        codes = _pq_assign_arrow(
-            subv.filter(F.col("vec_id") >= 10), *arrays, include_coords=False
-        ).select("vec_id", "j", "code")
-        dists_q = _pq_dists_from(subv.filter(F.col("vec_id") < 10), anch_df)
-    else:
-        dists = _pq_dists_from(subv, anch_df)
-        codes = _pq_codes(dists.filter(F.col("vec_id") >= 10)).select(
-            "vec_id", "j", "code"
-        )
-        dists_q = dists.filter(F.col("vec_id") < 10)
+    # Corpus side: argmin via the Arrow kernel — no M·K expansion.  Query
+    # side (the LUT) still needs the FULL per-anchor distance table, but
+    # only for the 10 query vectors: the Catalyst expression over the
+    # filtered subvector slice is trivial.
+    codes = _pq_assign_arrow(
+        subv.filter(F.col("vec_id") >= 10), *arrays, include_coords=False
+    ).select("vec_id", "j", "code")
+    dists_q = _pq_dists_from(subv.filter(F.col("vec_id") < 10), anch_df)
     lut = dists_q.select(F.col("vec_id").alias("qid"), "j", "aid", "d2")
     adc = (
         codes.join(F.broadcast(lut), (codes["j"] == lut["j"]) & (codes["code"] == lut["aid"]))
@@ -3419,21 +3359,14 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "cid")
     )
     subv, anch_df, arrays = _pq_model(spark, e)
-    if arrays is not None:
-        codes = _pq_assign_arrow(
-            subv.filter(F.col("vec_id") >= _N_QUERY_VECS),
-            *arrays,
-            include_coords=False,
-        ).select("vec_id", "j", "code")
-        dists_q = _pq_dists_from(
-            subv.filter(F.col("vec_id") < _N_QUERY_VECS), anch_df
-        )
-    else:
-        dists = _pq_dists_from(subv, anch_df)
-        codes = _pq_codes(
-            dists.filter(F.col("vec_id") >= _N_QUERY_VECS)
-        ).select("vec_id", "j", "code")
-        dists_q = dists.filter(F.col("vec_id") < _N_QUERY_VECS)
+    codes = _pq_assign_arrow(
+        subv.filter(F.col("vec_id") >= _N_QUERY_VECS),
+        *arrays,
+        include_coords=False,
+    ).select("vec_id", "j", "code")
+    dists_q = _pq_dists_from(
+        subv.filter(F.col("vec_id") < _N_QUERY_VECS), anch_df
+    )
     lut = dists_q.select(
         F.col("vec_id").alias("qid"), F.col("j").alias("lj"),
         F.col("aid").alias("laid"), "d2",
@@ -3633,7 +3566,8 @@ def _km_dims(
 def _km_assign(dims: DataFrame, cent: DataFrame) -> DataFrame:
     """(vec_id, cid): nearest-centroid assignment — broadcast the K·D
     centroid table, squared-L2 partial-aggregated per (vec_id, cid),
-    rounded to the oracle's 1e-4 grid, argmin with cid tiebreak."""
+    rounded to the oracle's 1e-4 grid, argmin with cid tiebreak.  The
+    join-formulation reference for _km_assign_arrow (tests)."""
     d2 = (F.col("x") - F.col("c")) * (F.col("x") - F.col("c"))
     return (
         dims.join(F.broadcast(cent), "i")
@@ -3643,20 +3577,6 @@ def _km_assign(dims: DataFrame, cent: DataFrame) -> DataFrame:
         .agg(F.min(F.struct("d2", "cid")).alias("m"))
         .select("vec_id", F.col("m.cid").alias("cid"), F.col("m.d2").alias("d2"))
     )
-
-
-def _km_arrow_on(spark: SparkSession) -> bool:
-    """Round-11 default: k-means assignment runs as a vectorized Arrow
-    kernel (no K-way broadcast-join row expansion); kill-switch
-    spark.graft.km_arrow=false restores the join + double-groupBy form."""
-    return spark.conf.get("spark.graft.km_arrow", "true") != "false"
-
-
-#: Dims-row ceiling for one-task Lloyd training — same rationale and
-#: arithmetic as _PQ_LOCAL_TRAIN_MAX_SUBV (sequential driver-synced jobs
-#: whose scheduling floor dwarfs the math below this size).  Kill-switch:
-#: spark.graft.km_local_train_max=0.
-_KM_LOCAL_TRAIN_MAX_DIMS = 4_000_000
 
 
 def _km_cent_arrays(rows):
@@ -3669,7 +3589,7 @@ def _km_cent_arrays(rows):
     for cid, i, c in rows:
         per.setdefault(cid, {})[i] = c
     cids = np.array(sorted(per), dtype=np.int64)
-    d = max(max(m) for m in per.values())
+    d = max((max(m) for m in per.values()), default=0)
     mat = np.zeros((len(cids), d), dtype=np.float64)
     for k, cid in enumerate(cids):
         for i, c in per[cid].items():
@@ -3685,7 +3605,11 @@ def _km_assign_arrow(dims: DataFrame, cids, cent) -> DataFrame:
     grid with the exact HALF_UP replica BEFORE the argmin — the same
     round-then-argmin contract the join + min(struct) form implements.
     Replaces the K-way broadcast-join expansion (K·D rows per vector)
-    with in-cache matrix math (guide §4.2).  Emits (vec_id, cid, d2)."""
+    with in-cache matrix math (guide §4.2).  Emits (vec_id, cid, d2).
+
+    Every vector's D rows must sit in ONE partition (the pinned vec_id
+    partitioning of _km_dims); a vector split across partitions raises
+    instead of being reshaped into the wrong rows."""
     n_dim = cent.shape[1]
 
     def kernel(batches):
@@ -3703,9 +3627,14 @@ def _km_assign_arrow(dims: DataFrame, cids, cent) -> DataFrame:
         x = np.concatenate(cols[2])
         order = np.lexsort((ii, vec))
         vec, x = vec[order], x[order]
-        nv = len(vec) // n_dim
+        vids, counts = np.unique(vec, return_counts=True)
+        if (counts != n_dim).any():
+            raise ValueError(
+                "k-means dims partition holds a vector without exactly "
+                f"{n_dim} rows: the vec_id partitioning was lost"
+            )
+        nv = len(vids)
         mat = x.reshape(nv, n_dim)
-        vids = vec[::n_dim]
         out_cid = np.empty(nv, dtype=np.int64)
         out_d2 = np.empty(nv, dtype=np.float64)
         step = 1 << 16
@@ -3791,57 +3720,36 @@ def _km_train_local(dims: DataFrame) -> DataFrame:
 
 
 def _km_model(spark: SparkSession, sf_dir: str):
-    """(dims, cent_df, cent_arrays): the checkpointed dims table plus the
-    TRAINED centroids as a local DataFrame and, on the Arrow path, as
-    (cids, [K,D]) arrays for the assignment kernel (None on the
-    kill-switch path)."""
-    if not _km_arrow_on(spark):
-        dims = _km_dims(spark, sf_dir)
-        return dims, _km_centroids(spark, dims), None
+    """(dims, cent_arrays): the checkpointed dims table plus the TRAINED
+    centroids as (cids, [K,D]) arrays for the assignment kernel."""
     counted: list = []
     dims = _km_dims(spark, sf_dir, count_into=counted)
-    local_max = int(
-        spark.conf.get(
-            "spark.graft.km_local_train_max", str(_KM_LOCAL_TRAIN_MAX_DIMS)
-        )
-    )
-    if counted and counted[0] <= local_max:
+    if kernel_gate(spark, "km_train", counted[0]):
         rows = [tuple(r) for r in _km_train_local(dims).collect()]
-    else:
-        # Distributed training with the Arrow assignment kernel: one
-        # means-collect job per iteration, as before, minus the K-way
-        # row expansion inside each.
-        seed_ids = (
-            dims.select("vec_id").distinct().orderBy("vec_id").limit(_KM_K)
+        return dims, _km_cent_arrays(rows)
+    # Distributed training with the Arrow assignment kernel: one
+    # means-collect job per iteration, minus the K-way row expansion
+    # inside each.
+    seed_ids = dims.select("vec_id").distinct().orderBy("vec_id").limit(_KM_K)
+    seed = dims.join(F.broadcast(seed_ids), "vec_id").select(
+        F.col("vec_id").alias("cid"), "i", F.col("x").alias("c")
+    )
+    cids, cent = _km_cent_arrays([tuple(r) for r in seed.collect()])
+    for _ in range(_KM_ITERS):
+        asg = _km_assign_arrow(dims, cids, cent).select("vec_id", "cid")
+        means = (
+            asg.join(dims, "vec_id")
+            .groupBy("cid", "i")
+            .agg(F.round(F.avg("x"), _KM_RND).alias("mc"))
+            .collect()
         )
-        seed = dims.join(F.broadcast(seed_ids), "vec_id").select(
-            F.col("vec_id").alias("cid"), "i", F.col("x").alias("c")
-        )
-        rows = [tuple(r) for r in seed.collect()]
-        cids, cent = _km_cent_arrays(rows)
-        for _ in range(_KM_ITERS):
-            asg = _km_assign_arrow(dims, cids, cent).select("vec_id", "cid")
-            means = (
-                asg.join(dims, "vec_id")
-                .groupBy("cid", "i")
-                .agg(F.round(F.avg("x"), _KM_RND).alias("mc"))
-                .collect()
-            )
-            upd = {(r[0], r[1]): r[2] for r in means}
-            import numpy as np  # noqa: PLC0415 — executor-free driver use
-
-            for k, cid in enumerate(cids):
-                for i in range(cent.shape[1]):
-                    m = upd.get((int(cid), i + 1))
-                    if m is not None:
-                        cent[k, i] = m
-        rows = [
-            (int(cids[k]), i + 1, float(cent[k, i]))
-            for k in range(len(cids))
-            for i in range(cent.shape[1])
-        ]
-    cent_df = spark.createDataFrame(rows, schema="cid long, i int, c double")
-    return dims, cent_df, _km_cent_arrays(rows)
+        upd = {(r[0], r[1]): r[2] for r in means}
+        for k, cid in enumerate(cids):
+            for i in range(cent.shape[1]):
+                m = upd.get((int(cid), i + 1))
+                if m is not None:
+                    cent[k, i] = m
+    return dims, (cids, cent)
 
 
 def _km_centroids(spark: SparkSession, dims: DataFrame) -> DataFrame:
@@ -3850,7 +3758,9 @@ def _km_centroids(spark: SparkSession, dims: DataFrame) -> DataFrame:
     table is a constant-size model artifact (K·D = 512 rows), so each
     update is collected and re-broadcast — the same legitimate driver
     materialization as the PQ codebook; at 100 TB training runs on a
-    corpus sample with the identical plan, assignment stays distributed."""
+    corpus sample with the identical plan, assignment stays distributed.
+    The product trains in _km_model; this join formulation is the
+    reference the tests hold it to."""
     seed_ids = dims.select("vec_id").distinct().orderBy("vec_id").limit(_KM_K)
     cent = (
         dims.join(F.broadcast(seed_ids), "vec_id")
@@ -3898,15 +3808,9 @@ def vec_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     is K·D scalars per iteration (model artifact, not data).  Since
     round 11 assignment runs as the vectorized Arrow kernel
     (_km_assign_arrow — no K-way row expansion) and small corpora train
-    in one task (_km_train_local); spark.graft.km_arrow=false restores
-    the join formulation."""
-    dims, cent, arrays = _km_model(spark, sf_dir)
-    out = (
-        _km_assign_arrow(dims, *arrays)
-        if arrays is not None
-        else _km_assign(dims, cent)
-    )
-    return out.select("vec_id", F.col("cid").alias("cluster_id"), "d2")
+    in one task (_km_train_local)."""
+    dims, arrays = _km_model(spark, sf_dir)
+    return _km_assign_arrow(dims, *arrays).select("vec_id", F.col("cid").alias("cluster_id"), "d2")
 
 
 @query(

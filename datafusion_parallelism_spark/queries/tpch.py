@@ -731,35 +731,9 @@ def tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
     suppkey among late lineitems), both via one (ok, sk) pre-aggregate
     (no Expand: two plain counts over per-supplier flags).  Every
     aggregate and the agg⋈per_supp join reuse the single l_orderkey
-    exchange.  Results are identical (oracle-verified; the EXISTS form
-    stays under spark.graft.q21_agg=false — the decorrelation surface
-    itself is still exercised by join_exists/join_left_semi and the
-    other EXISTS queries)."""
-    if spark.conf.get("spark.graft.q21_agg", "true") == "false":
-        return _sql(
-            spark,
-            sf_dir,
-            """
-            SELECT s_name, COUNT(*) AS numwait
-            FROM supplier
-            JOIN lineitem l1 ON s_suppkey = l1.l_suppkey
-            JOIN orders ON o_orderkey = l1.l_orderkey
-            WHERE o_orderstatus = 'F'
-              AND l1.l_shipdate > o_orderdate + INTERVAL 60 DAY
-              AND EXISTS (
-                SELECT 1 FROM lineitem l2
-                WHERE l2.l_orderkey = l1.l_orderkey AND l2.l_suppkey <> l1.l_suppkey
-              )
-              AND NOT EXISTS (
-                SELECT 1 FROM lineitem l3
-                WHERE l3.l_orderkey = l1.l_orderkey AND l3.l_suppkey <> l1.l_suppkey
-                  AND l3.l_shipdate > o_orderdate + INTERVAL 60 DAY
-              )
-            GROUP BY s_name
-            ORDER BY numwait DESC, s_name
-            LIMIT 20
-            """,
-        )
+    exchange.  Results are identical (oracle-verified; the EXISTS
+    decorrelation surface itself is exercised by tpch_q4/q22,
+    join_left_semi/join_left_anti and the other EXISTS queries)."""
     return _sql(
         spark,
         sf_dir,

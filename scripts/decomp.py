@@ -7,12 +7,10 @@ stages 1..N, so stage cost = wall[N] − wall[N−1] up to re-run noise;
 localCheckpoint blocks are released between stages off the clock).  Prints
 one JSON line per stage.
 
-Round-8 subject (VERDICT r7 item 3): dedup_ngram_jaccard at x256 is the
-biggest non-graph line (127 s cold, scale_sweep_r7.jsonl) and has never had
-a stage decomposition.  Round-9 subject (VERDICT r8 item 1): the ``chain``
-pipeline decomposes join_inner_chain's ×2.81 decade leg join-by-join.
+Pipelines: ``winnow`` (dedup_winnow_spans) and ``chain`` (join_inner_chain's
+×2.81 decade leg, join-by-join).
 
-Usage: python scripts/decomp.py SF_DIR {jaccard|winnow|chain}
+Usage: python scripts/decomp.py SF_DIR {winnow|chain}
 Env:   DECOMP_METRICS=1  enable the Spark UI and attach per-Spark-stage
        shuffle read/write, spill, and input bytes (REST API) to each
        prefix's JSON row — the spill evidence VERDICT r8 item 1 asks for.
@@ -30,71 +28,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 PROTOCOL = "decomp-v1"
-
-
-def jaccard_stages(spark, sf_dir):
-    """Cumulative prefixes of dedup_ngram_jaccard's NO_SHARE shape.
-
-    These stages decompose the PRE-round-8 plan — a fresh
-    ``_blocked_shingle_index`` plus a fresh ``_doc_shingles`` denominator —
-    i.e. the recompute shape whose duplicated scan+tokenize+shingle pass the
-    r8 shared-checkpoint fix removed (queries/llm.py:287).  That is what the
-    r8 investigation needed (it produced the finding), but it is NOT the
-    shipped plan anymore: to compare decomp rows against a live run, set
-    ``SPARK_GRAFT_JACCARD_NO_SHARE=1`` so the product runs this same shape
-    (ADVICE r8 #2)."""
-    from datafusion_parallelism_spark.queries.llm import (
-        JACCARD_THRESHOLD,
-        _blocked_shingle_index,
-        _doc_shingles,
-        _docs_spread,
-        _shingle_table,
-    )
-
-    d = _docs_spread(spark, sf_dir)
-    n_part = spark.sparkContext.defaultParallelism
-
-    def pairs_counted():
-        sh = _blocked_shingle_index(d, n_part)
-        a, b = sh.alias("a"), sh.alias("b")
-        return (
-            a.join(
-                b,
-                (F.col("a.s") == F.col("b.s"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .select(
-                F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-            )
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
-
-    def scored():
-        shared = pairs_counted()
-        cnt = _doc_shingles(d).select("doc_id", "n")
-        jac = F.round(
-            F.col("c") / (F.col("ca.n") + F.col("cb.n") - F.col("c")), 4
-        )
-        return (
-            shared.join(cnt.alias("ca"), F.col("ca.doc_id") == F.col("doc_a"))
-            .join(cnt.alias("cb"), F.col("cb.doc_id") == F.col("doc_b"))
-            .select("doc_a", "doc_b", jac.alias("jaccard"))
-            .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-        )
-
-    return [
-        # scan + split + shingle arrays (pure map over text)
-        ("shingle_arrays", lambda: _doc_shingles(d)),
-        # + explode to the inverted-index row shape
-        ("exploded", lambda: _shingle_table(d)),
-        # + repartition by shingle + window df + stop-shingle filter
-        ("indexed", lambda: _blocked_shingle_index(d, n_part)),
-        # + blocked self-join + map-side-combined pair counts
-        ("pairs_counted", pairs_counted),
-        # + per-doc |set| joins + Jaccard scoring (the full query)
-        ("scored", scored),
-    ]
 
 
 def winnow_stages(spark, sf_dir):
@@ -178,7 +111,6 @@ def chain_stages(spark, sf_dir):
 
 
 PIPELINES = {
-    "jaccard": jaccard_stages,
     "winnow": winnow_stages,
     "chain": chain_stages,
 }

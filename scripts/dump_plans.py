@@ -1,15 +1,15 @@
-"""Dump formatted explain output for the round-11-touched queries.
+"""Dump formatted explain output for a list of queries.
 
-Writes ``<out_dir>/<query>_<suffix>.txt`` for each named query, using the
-same benchmark_session conf as bench.py so the plans match what the bench
-executes.  Run once at HEAD (suffix ``after``) and once from a worktree at
-the round-10 end commit (suffix ``before``) to produce the paired plan
-evidence required by the optimization-round contract.
+Writes ``<out_dir>/<query>_<suffix>.txt`` for each query named by
+``--queries``, using the same benchmark_session conf as bench.py so the
+plans match what the bench executes.  Run once at HEAD (suffix ``after``)
+and once from a clean checkout of the baseline commit (suffix ``before``)
+to produce paired before/after plan evidence (e.g. ``plans/r11/``).
 
 Usage::
 
-    python scripts/dump_plans_r11.py --out-dir plans/r11 --suffix after \
-        [--data-path /root/testdata/sf0.1] [query ...]
+    python scripts/dump_plans.py --out-dir plans/r11 --suffix after \
+        --queries graph_pagerank tpch_q21 [--data-path /root/testdata/sf0.1]
 """
 
 from __future__ import annotations
@@ -24,17 +24,6 @@ from datafusion_parallelism_spark.plans.shaping import explain_str  # noqa: E402
 from datafusion_parallelism_spark.queries import REGISTRY  # noqa: E402
 from datafusion_parallelism_spark.session import benchmark_session  # noqa: E402
 
-R11_QUERIES = [
-    "graph_pagerank",
-    "graph_triangle_counts",
-    "tpch_q21",
-    "vec_pq_codes",
-    "ann_pq_topk",
-    "ann_ivfpq_topk",
-    "vec_kmeans_clusters",
-    "mix_cluster_balanced_sample",
-]
-
 
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__)
@@ -44,17 +33,16 @@ def main() -> None:
     )
     ap.add_argument("--out-dir", required=True)
     ap.add_argument("--suffix", required=True, choices=["before", "after"])
-    ap.add_argument("queries", nargs="*", default=None)
+    ap.add_argument("--queries", nargs="+", required=True)
     args = ap.parse_args()
 
-    names = args.queries or R11_QUERIES
-    unknown = [n for n in names if n not in REGISTRY]
+    unknown = [n for n in args.queries if n not in REGISTRY]
     if unknown:
         raise SystemExit(f"unknown queries: {unknown}")
 
     os.makedirs(args.out_dir, exist_ok=True)
-    spark = benchmark_session(args.data_path, app_name=f"plans-r11-{args.suffix}")
-    for name in names:
+    spark = benchmark_session(args.data_path, app_name=f"plans-{args.suffix}")
+    for name in args.queries:
         spark.sparkContext.setJobDescription(f"plan:{name}")
         df = REGISTRY[name].fn(spark, args.data_path)
         path = os.path.join(args.out_dir, f"{name}_{args.suffix}.txt")

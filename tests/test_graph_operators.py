@@ -1,6 +1,7 @@
 """Graph-operator unit tests: connected_components and pagerank."""
 
 import numpy as np
+import pytest
 
 from datafusion_parallelism_spark.operators.graph import (
     connected_components,
@@ -211,3 +212,39 @@ def test_triangle_kernel_matches_distributed(spark):
         else:
             spark.conf.set("spark.graft.tri_local_max_edges", prev)
     assert kern == dist
+
+
+@pytest.mark.parametrize("site", ["pagerank_bounded", "pagerank_measured", "cc"])
+def test_kernel_gate_zero_disables_kernel_on_empty_graph(spark, monkeypatch, site):
+    """A gate ceiling of 0 always takes the distributed path — also when
+    the bound is 0 (an empty graph), where ``bound <= ceiling`` alone
+    would still pick the single-task kernel."""
+    from datafusion_parallelism_spark.operators import graph
+
+    called = []
+    for name in ("_pagerank_arrow", "_cc_arrow"):
+        real = getattr(graph, name)
+        monkeypatch.setattr(
+            graph,
+            name,
+            lambda *a, _real=real, _name=name, **k: called.append(_name)
+            or _real(*a, **k),
+        )
+    edges = spark.createDataFrame([], schema="u long, v long")
+    conf = "cc_local_max_edges" if site == "cc" else "pagerank_local_max_edges"
+    prev = spark.conf.get(f"spark.graft.{conf}", None)
+    spark.conf.set(f"spark.graft.{conf}", "0")
+    try:
+        if site == "cc":
+            out = connected_components(edges)
+        elif site == "pagerank_bounded":
+            out = pagerank(edges, approx_edge_bound=0)
+        else:
+            out = pagerank(edges)
+        assert out.collect() == []
+    finally:
+        if prev is None:
+            spark.conf.unset(f"spark.graft.{conf}")
+        else:
+            spark.conf.set(f"spark.graft.{conf}", prev)
+    assert called == []

@@ -41,3 +41,31 @@ def test_every_oracle_query_is_locally_tested():
         f"queries with oracles but no local oracle test: {uncovered} — "
         "add their prefix to a sweep or an explicit test"
     )
+
+
+def test_conf_inventory_is_the_reviewed_set():
+    """Every ``spark.graft.*`` conf and ``SPARK_GRAFT_*`` env var the
+    package mentions.  A conf that only brings back a superseded
+    formulation for an A/B run is a second code path to keep alive; a new
+    knob must be added here on purpose.  Surviving confs: the five
+    single-task kernel gates (plans/shaping.KERNEL_GATES) and the two
+    streaming sink settings; env vars: deployment only."""
+    import pathlib
+    import re
+
+    import datafusion_parallelism_spark
+
+    root = pathlib.Path(datafusion_parallelism_spark.__file__).parent
+    text = "\n".join(p.read_text() for p in sorted(root.rglob("*.py")))
+    confs = set(re.findall(r"spark\.graft\.([a-z0-9_]+)", text))
+    env = set(re.findall(r"SPARK_GRAFT_([A-Z0-9_]+)", text))
+    assert confs == {
+        "pagerank_local_max_edges",
+        "cc_local_max_edges",
+        "tri_local_max_edges",
+        "pq_local_train_max",
+        "km_local_train_max",
+        "totals_buckets",
+        "stream_sink",
+    }, confs
+    assert env == {"SF_DIR", "CPUS", "DRIVER_MEM"}, env
