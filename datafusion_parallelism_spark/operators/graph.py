@@ -174,12 +174,14 @@ def _pagerank_arrow(
 def _cc_arrow(und: DataFrame, max_iter: int) -> DataFrame:
     """Single-task connected components over a small symmetrized distinct
     edge table: the EXACT distributed schedule (one-hop neighbor minimum +
-    two pointer jumps per iteration, stop on unchanged labels, raise past
-    ``max_iter``) run in NumPy inside one ``mapInArrow`` task.  Pure
-    integer math — iterates, iteration counts and the non-convergence
-    contract are identical to the distributed loop by construction.
-    Emits (node, cluster, iters); iters is constant (observability for
-    the stats dict)."""
+    two pointer jumps per iteration, stop on unchanged labels, give up
+    past ``max_iter``) run in NumPy inside one ``mapInArrow`` task.  Pure
+    integer math — iterates and iteration counts are identical to the
+    distributed loop by construction.  Emits (node, cluster, iters,
+    converged); iters and converged are constant columns.  The kernel
+    never raises on non-convergence: the caller reads the flag after
+    materializing and raises on the driver, so the task (and its retries)
+    always succeed."""
     node_t = und.schema["src"].dataType.simpleString()
 
     def kernel(batches):
@@ -215,30 +217,35 @@ def _cc_arrow(und: DataFrame, max_iter: int) -> DataFrame:
                 break
             label = new
             iterations += 1
-        if not converged:
-            raise RuntimeError(
-                f"connected_components did not converge in {max_iter} "
-                "iterations (component diameter exceeds max_iter); raise "
-                "max_iter"
-            )
         yield pa.RecordBatch.from_arrays(
             [
                 pa.array(nodes),
                 pa.array(nodes[label]),
                 pa.array(np.full(n, iterations, dtype=np.int32)),
+                pa.array(np.full(n, converged)),
             ],
-            names=["node", "cluster", "iters"],
+            names=["node", "cluster", "iters", "converged"],
         )
 
     return und.coalesce(1).mapInArrow(
-        kernel, schema=f"node {node_t}, cluster {node_t}, iters int"
+        kernel,
+        schema=f"node {node_t}, cluster {node_t}, iters int, converged boolean",
+    )
+
+
+def _not_converged(max_iter: int) -> RuntimeError:
+    # Silent wrong labels are worse than failing: min-label propagation
+    # moves the minimum one hop per iteration, so a component with
+    # diameter > max_iter would return non-minimal cluster ids.
+    return RuntimeError(
+        f"connected_components did not converge in {max_iter} iterations "
+        "(component diameter exceeds max_iter); raise max_iter"
     )
 
 
 def connected_components(
     edges: DataFrame,
     max_iter: int = 20,
-    checkpoint: bool = True,
     stats: dict | None = None,
 ) -> DataFrame:
     """Connected components of an undirected graph.
@@ -252,7 +259,7 @@ def connected_components(
     number of label-update iterations executed (convergence-detection
     iteration excluded) — observability for the log-diameter guarantee.
 
-    Job budget (checkpoint=True): setup = 2 jobs (edge checkpoint+count,
+    Job budget: setup = 2 jobs (edge checkpoint+count,
     label checkpoint), then exactly 1 job per iteration — the label
     checkpoint, whose ``observe`` carries the convergence sum.
     """
@@ -277,62 +284,53 @@ def connected_components(
         .select("e.src", "e.dst")
         .distinct()
     )
-    if checkpoint:
-        # The edge list is re-joined every iteration; without truncating its
-        # lineage here, the WHOLE upstream pipeline that produced the edges
-        # (e.g. MinHash-LSH candidate generation) re-executes per iteration.
-        und = und.localCheckpoint(eager=True)
+    # The edge list is re-joined every iteration; without truncating its
+    # lineage here, the WHOLE upstream pipeline that produced the edges
+    # (e.g. MinHash-LSH candidate generation) re-executes per iteration.
+    und = und.localCheckpoint(eager=True)
     m = und.count()
     # Small-graph fast path (round 11, mirroring pagerank's): below the
     # kernel ceiling the whole label-propagation loop (up to max_iter + 1
     # driver-synced jobs of pure scheduling floor on a near-dup candidate
     # graph) runs inside ONE Arrow task with the identical integer
-    # schedule, including the non-convergence raise — surfaced here
-    # driver-side via an eager materialization so the contract (raise
-    # from THIS call, not a later action) is preserved.
-    if checkpoint and kernel_gate(spark, "cc", m):
-        labeled = _cc_arrow(und, max_iter)
-        try:
-            labeled = labeled.localCheckpoint(eager=True)
-        except Exception as exc:  # noqa: BLE001 — re-raise unless ours
-            # The kernel's raise surfaces wrapped (PythonException /
-            # Py4JJavaError depending on path); restore the operator's
-            # driver-side RuntimeError contract.
-            if "did not converge" not in str(exc):
-                raise
-            raise RuntimeError(
-                f"connected_components did not converge in {max_iter} "
-                "iterations (component diameter exceeds max_iter); "
-                "raise max_iter"
-            ) from None
+    # schedule.  The kernel's converged flag and iteration count ride the
+    # eager materialization as observe metrics, and the non-convergence
+    # raise happens HERE on the driver (from THIS call, not a later
+    # action) once the job has succeeded — no failed task, no retries.
+    if kernel_gate(spark, "cc", m):
+        obs = Observation()
+        labeled = (
+            _cc_arrow(und, max_iter)
+            .observe(
+                obs,
+                F.bool_and("converged").alias("ok"),
+                F.max("iters").alias("iters"),
+            )
+            .localCheckpoint(eager=True)
+        )
+        if obs.get["ok"] is False:  # None: empty graph, nothing to label
+            raise _not_converged(max_iter)
         if stats is not None:
-            row = labeled.select("iters").first()
-            stats["iterations"] = 0 if row is None else int(row[0])
+            stats["iterations"] = obs.get["iters"] or 0
         return labeled.select("node", "cluster")
     parts = _state_parts(m, conf_parts)
-    if checkpoint:
-        # Pin the (large) edge side on dst at state width once; the per-
-        # iteration join und⋈labels is then co-partitioned and exchange-free
-        # and pre-SORTED on dst so the per-iteration SortMergeJoin skips
-        # re-sorting the loop-invariant edge side too.  _ckpt_pinned is
-        # what makes both properties real at scale: a plain
-        # localCheckpoint under AQE stores Unknown/Nil and every iteration
-        # re-exchanges AND re-sorts the |E|-row side (round-10 finding).
-        und = _ckpt_pinned(
-            und.repartition(parts, "dst").transform(_presorted, "dst")
-        )
+    # Pin the (large) edge side on dst at state width once; the per-
+    # iteration join und⋈labels is then co-partitioned and exchange-free
+    # and pre-SORTED on dst so the per-iteration SortMergeJoin skips
+    # re-sorting the loop-invariant edge side too.  _ckpt_pinned is
+    # what makes both properties real at scale: a plain
+    # localCheckpoint under AQE stores Unknown/Nil and every iteration
+    # re-exchanges AND re-sorts the |E|-row side (round-10 finding).
+    und = _ckpt_pinned(und.repartition(parts, "dst").transform(_presorted, "dst"))
 
     labels = (
         _sized(und.select(F.col("src").alias("node")), parts, conf_parts, "node")
         .distinct()
         .withColumn("cluster", F.col("node"))
     )
-    if checkpoint:
-        obs0 = Observation()
-        labels = _ckpt_pinned(labels.observe(obs0, F.sum("cluster").alias("s")))
-        prev_sum = obs0.get["s"]
-    else:
-        prev_sum = labels.agg(F.sum("cluster")).collect()[0][0]
+    obs0 = Observation()
+    labels = _ckpt_pinned(labels.observe(obs0, F.sum("cluster").alias("s")))
+    prev_sum = obs0.get["s"]
 
     converged = False
     iterations = 0
@@ -389,14 +387,11 @@ def connected_components(
                     F.coalesce(F.col("p_cluster"), F.col("cluster")).alias("cluster"),
                 )
             )
-        if checkpoint:
-            obs = Observation()
-            new_labels = new_labels.observe(
-                obs, F.sum("cluster").alias("s")
-            ).localCheckpoint(eager=True)
-            new_sum = obs.get["s"]
-        else:
-            new_sum = new_labels.agg(F.sum("cluster")).collect()[0][0]
+        obs = Observation()
+        new_labels = new_labels.observe(
+            obs, F.sum("cluster").alias("s")
+        ).localCheckpoint(eager=True)
+        new_sum = obs.get["s"]
         labels = new_labels
         if new_sum == prev_sum:
             converged = True
@@ -406,13 +401,7 @@ def connected_components(
     if stats is not None:
         stats["iterations"] = iterations
     if not converged:
-        # Silent wrong labels are worse than failing: min-label propagation
-        # moves the minimum one hop per iteration, so a component with
-        # diameter > max_iter would return non-minimal cluster ids.
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} iterations "
-            "(component diameter exceeds max_iter); raise max_iter"
-        )
+        raise _not_converged(max_iter)
     return labels
 
 
@@ -420,7 +409,6 @@ def pagerank(
     edges: DataFrame,
     damping: float = 0.85,
     iterations: int = 10,
-    checkpoint: bool = True,
     assume_distinct: bool = False,
     approx_edge_bound: int | None = None,
 ) -> DataFrame:
@@ -468,8 +456,8 @@ def pagerank(
     mass from src- to dst-partitioning (information-theoretically
     required), plus a |V|-sized contrib re-exchange in the lazy ranks
     view (the contrib checkpoint deliberately stays un-pinned so the
-    heavy aggregation job keeps AQE's advisory-size coalescing).  Job budget
-    (checkpoint=True): 2 setup jobs at real scale (normalized-edge and
+    heavy aggregation job keeps AQE's advisory-size coalescing).  Job budget:
+    2 setup jobs at real scale (normalized-edge and
     node checkpoints, with the edge/node counts riding them as observe
     metrics; +1 cheap state-width re-pin job in the small regime), then
     exactly 1 job per iteration.  The only driver state is three scalars
@@ -526,14 +514,9 @@ def pagerank(
         .select("src", "dsts", (F.lit(1.0) / F.size("dsts")).alias("w"))
     )
     m_expr = F.coalesce(F.sum(F.size("dsts")), F.lit(0)).alias("m")
-    if checkpoint:
-        obs_m = Observation()
-        e_loop = _ckpt_pinned(
-            e_loop.observe(obs_m, m_expr).transform(_presorted, "src")
-        )
-        m = obs_m.get["m"]
-    else:
-        m = e_loop.agg(m_expr).collect()[0][0]
+    obs_m = Observation()
+    e_loop = _ckpt_pinned(e_loop.observe(obs_m, m_expr).transform(_presorted, "src"))
+    m = obs_m.get["m"]
     # Small-graph fast path (round 11): once the edge count is measured
     # (it rides the checkpoint job either way), a graph under the kernel
     # ceiling runs every iteration inside one Arrow task — no node
@@ -551,7 +534,7 @@ def pagerank(
     # per ~50k state rows, floor 4, ceiling the session conf (no-op at real
     # scale), applied per shuffle point instead of the r4 session-conf flip.
     parts = _state_parts(m, conf_parts)
-    if checkpoint and parts < conf_parts:
+    if parts < conf_parts:
         # Small-state regime: re-pin the (small) normalized edges at state
         # width so every loop stage runs at `parts`; at real scale the
         # join output is already hashpartitioning(src, conf-width) from
@@ -570,15 +553,12 @@ def pagerank(
         )
         .distinct()
     )
-    if checkpoint:
-        obs_n = Observation()
-        nodes = _ckpt_pinned(
-            nodes.observe(obs_n, F.count(F.lit(1)).alias("n"))
-            .transform(_presorted, "node")
-        )
-        n = obs_n.get["n"]
-    else:
-        n = nodes.count()
+    obs_n = Observation()
+    nodes = _ckpt_pinned(
+        nodes.observe(obs_n, F.count(F.lit(1)).alias("n"))
+        .transform(_presorted, "node")
+    )
+    n = obs_n.get["n"]
 
     # Loop shape: the ONLY materialization per iteration is the
     # contribution table (eager checkpoint = one job), whose observe
@@ -600,23 +580,12 @@ def pagerank(
             .groupBy("dst")
             .agg(F.sum("c").alias("contrib"))
         )
-        if checkpoint:
-            obs = Observation()
-            contrib = contrib.observe(
-                obs, F.coalesce(F.sum("contrib"), F.lit(0.0)).alias("s")
-            ).localCheckpoint(eager=True)
-            dm = F.lit(1.0 - obs.get["s"])
-        else:
-            # Lazy path: the dangling mass stays a 1-row DataFrame cross-
-            # broadcast onto the update (no materialization to observe).
-            dangling = contrib.agg(
-                (F.lit(1.0) - F.coalesce(F.sum("contrib"), F.lit(0.0))).alias("dm")
-            )
-        new_ranks = nodes.join(contrib, nodes["node"] == contrib["dst"], "left")
-        if not checkpoint:
-            new_ranks = new_ranks.crossJoin(F.broadcast(dangling))
-            dm = F.col("dm")
-        ranks = new_ranks.select(
+        obs = Observation()
+        contrib = contrib.observe(
+            obs, F.coalesce(F.sum("contrib"), F.lit(0.0)).alias("s")
+        ).localCheckpoint(eager=True)
+        dm = F.lit(1.0 - obs.get["s"])
+        ranks = nodes.join(contrib, nodes["node"] == contrib["dst"], "left").select(
             "node",
             (
                 F.lit((1.0 - damping) / n)

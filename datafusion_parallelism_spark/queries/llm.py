@@ -45,6 +45,13 @@ from ..functions.text import (
     word_shingles,
 )
 from ..functions.vectors import as_double, cosine, norm
+from ..operators.pairs import (
+    _pair_parallelism,
+    _stream_pairs,
+    data_ahead_width,
+    drop_hot_keys,
+    shared_key_pair_counts,
+)
 from ..plans.shaping import kernel_gate
 from ..session import load, spread_for_compute
 from .registry import query
@@ -263,79 +270,6 @@ def _shingle_table(d: DataFrame) -> DataFrame:
     return _doc_shingles(d).select("doc_id", F.explode("shingles").alias("s"))
 
 
-def _blocked_shingle_index(d: DataFrame, n_part: int) -> DataFrame:
-    """Pair-join-ready inverted shingle index: repartitioned by shingle
-    (co-partitions both self-join aliases) with stop-shingles above
-    SHINGLE_DF_CEILING removed.  The df filter is a window COUNT over the
-    same s-partitioning the join needs — zero extra exchanges."""
-    return _blocked_index_from_arrays(_doc_shingles(d), n_part)
-
-
-def _pair_parallelism(spark: SparkSession) -> int:
-    """Width for the blocked pair self-joins' explicit key repartitions:
-    max(cores, session shuffle width).  defaultParallelism alone (the
-    pre-round-10 choice) is a FIXED 32 on any corpus — at the x256
-    replica the session's data-proportional width is 128, and pinning
-    the index to 32 starved the join stages to a quarter of the
-    intended parallelism with 4x the per-task aggregate state.  The
-    session conf scales with input bytes (session.auto_shuffle_partitions)
-    and AQE coalesces any excess at small factors; the cores floor keeps
-    the historical fan-out guarantee (shingle explode ~50x the input
-    bytes the conf was sized from)."""
-    return max(
-        spark.sparkContext.defaultParallelism,
-        int(spark.conf.get("spark.sql.shuffle.partitions")),
-    )
-
-
-#: Pair-stream exchange width as a multiple of the session width (see
-#: _stream_pairs).
-_PAIR_WIDTH_FACTOR = 4
-
-
-def _stream_pairs(pairs: DataFrame) -> DataFrame:
-    """Route a Σ df(key)² candidate-pair stream through a pair-keyed
-    exchange BEFORE its count aggregate (see winnow_pair_counts for the
-    x256 stage-counter evidence: the map-side partial aggregate combines
-    only ~2.5-3x — a pair sharing n keys lands in ~n different key
-    partitions — while its hash map exceeds the task memory share and
-    falls back to sort-based aggregation, re-sorting the whole stream;
-    28.6 GB of memory spill on dedup_ngram_jaccard's pair stage alone).
-    With the exchange below the aggregate, the join stage hash-routes
-    pair rows straight to the shuffle and each reduce task counts its
-    own pairs over an AQE-coalesced input — bounded state at any corpus
-    size.
-
-    The exchange width is EXPLICIT at _PAIR_WIDTH_FACTOR × session width
-    (r10): a column-only repartition inherits spark.sql.shuffle.partitions,
-    which is sized from INPUT bytes — but the pair stream is Σ df²,
-    superlinear in input, so the reduce-side count aggregate's hash map
-    grows per-task with scale (dedup_containment x64 ledger: 35 tasks,
-    30 GB aggregate peak ≈ 0.9 GB/task, 46 GB memory-spill under
-    32-concurrent-task pool contention).  AQE can coalesce an oversized
-    exchange but can never SPLIT an undersized one, so the width must
-    start data-ahead; the ×4 buys one decade of pair-volume growth and
-    costs only smaller tasks where the stream is small."""
-    spark = pairs.sparkSession
-    return pairs.repartition(
-        _PAIR_WIDTH_FACTOR * _pair_parallelism(spark), "doc_a", "doc_b"
-    )
-
-
-def _blocked_index_from_arrays(arrays: DataFrame, n_part: int) -> DataFrame:
-    """``_blocked_shingle_index`` starting from an already-built
-    (doc_id, shingles, n) table — lets callers that ALSO need the per-doc
-    set sizes share one tokenize+shingle pass instead of two."""
-    sh = arrays.select("doc_id", F.explode("shingles").alias("s")).repartition(
-        n_part, "s"
-    )
-    return (
-        sh.withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("s")))
-        .filter(F.col("df") <= SHINGLE_DF_CEILING)
-        .select("doc_id", "s")
-    )
-
-
 def _shared_shingle_arrays(d: DataFrame) -> DataFrame:
     """(doc_id, shingles, n), lazily checkpointed for multi-consumer plans.
 
@@ -377,82 +311,83 @@ _SHINGLE_CTE = f"""
 """
 
 
-@query(
-    "dedup_ngram_jaccard",
-    oracle=f"""
+def _shingle_overlap_oracle(name: str, score: str, threshold: float) -> str:
+    """Oracle for a ``_shingle_overlap`` scorer: ``score`` is a SQL
+    expression over the shared count ``c`` and the set sizes ``ca.n``,
+    ``cb.n``."""
+    return f"""
     WITH {_SHINGLE_CTE},
     shared AS (
       SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS c
       FROM shf a JOIN shf b ON a.s = b.s AND a.doc_id < b.doc_id
       GROUP BY 1, 2
     )
-    SELECT doc_a, doc_b,
-           ROUND(c * 1.0 / (ca.n + cb.n - c), 4) AS jaccard
+    SELECT doc_a, doc_b, {score} AS {name}
     FROM shared
     JOIN cnt ca ON ca.doc_id = doc_a
     JOIN cnt cb ON cb.doc_id = doc_b
-    WHERE ROUND(c * 1.0 / (ca.n + cb.n - c), 4) >= {JACCARD_THRESHOLD}
-    """,
-)
-def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact n-gram Jaccard near-dup pairs via an inverted shingle index
-    (explode → self-join on shingle → count shared → Jaccard).  The join is
-    blocked on the shingle value, so cost is Σ df(s)² over shingles, not
-    |docs|²; hot shingles are the skew risk and AQE's skew-join split is
-    the mitigation (reference analog: work-stealing repartition, SURVEY
-    A22).  Shingles with df > SHINGLE_DF_CEILING are excluded from pair
-    generation (stop-shingle rule, mirrored in the oracle): without the
-    ceiling the Σ df² cost grows super-linearly as common boilerplate
-    accumulates — measured 33 s at x16 -> 314 s at x64 before the cap."""
+    WHERE {score} >= {threshold}
+    """
+
+
+def _shingle_overlap(
+    spark: SparkSession, sf_dir: str, name: str, score: Column, threshold: float
+) -> DataFrame:
+    """(doc_a, doc_b, ``name``) near-dup pairs via an inverted shingle index
+    (explode → self-join on shingle → count shared ``c`` → ``score`` over
+    ``c`` and the set sizes ``ca.n``/``cb.n``, kept at >= ``threshold``).
+    The join is blocked on the shingle value, so cost is Σ df(s)² over
+    shingles, not |docs|²; hot shingles are the skew risk and AQE's
+    skew-join split is the mitigation (reference analog: work-stealing
+    repartition, SURVEY A22).  Shingles with df > SHINGLE_DF_CEILING are
+    excluded from pair generation (stop-shingle rule, mirrored in the
+    oracle)."""
     d = _docs_spread(spark, sf_dir)
-    # Repartition the index by the join key (co-partitions BOTH aliases,
-    # so the join adds no further exchange) at data-proportional width —
-    # see _pair_parallelism.  The pair count STREAMS through a pair-keyed
-    # exchange (round 10, replacing the r2 map-side-combine posture whose
-    # 16x-scale measurement predated the x256 evidence): _stream_pairs.
-    n_part = _pair_parallelism(spark)
     arrays = _shared_shingle_arrays(d)
-    sh = _blocked_index_from_arrays(arrays, n_part)
-    a, b = sh.alias("a"), sh.alias("b")
-    shared = (
-        _stream_pairs(
-            a.join(
-                b,
-                (F.col("a.s") == F.col("b.s"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            ).select(
-                F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-            )
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("c"))
+    # Repartition the index by the join key (co-partitions BOTH aliases,
+    # so the join adds no further exchange, and the df cap rides it) at
+    # data-proportional width — see _pair_parallelism.  The pair count
+    # STREAMS through a pair-keyed exchange at the 4× width (round 10,
+    # replacing the r2 map-side-combine posture whose 16x-scale
+    # measurement predated the x256 evidence): see operators/pairs.py.
+    index = arrays.select("doc_id", F.explode("shingles").alias("s")).repartition(
+        _pair_parallelism(spark), "s"
+    )
+    shared = shared_key_pair_counts(
+        drop_hot_keys(index, "s", SHINGLE_DF_CEILING),
+        "s",
+        "doc_id",
+        width=data_ahead_width(spark),
     )
     cnt = arrays.select("doc_id", "n")
-    jac = F.round(F.col("c") / (F.col("ca.n") + F.col("cb.n") - F.col("c")), 4)
     return (
         shared.join(cnt.alias("ca"), F.col("ca.doc_id") == F.col("doc_a"))
         .join(cnt.alias("cb"), F.col("cb.doc_id") == F.col("doc_b"))
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
+        .select("doc_a", "doc_b", score.alias(name))
+        .filter(F.col(name) >= threshold)
     )
+
+
+@query(
+    "dedup_ngram_jaccard",
+    oracle=_shingle_overlap_oracle(
+        "jaccard", "ROUND(c * 1.0 / (ca.n + cb.n - c), 4)", JACCARD_THRESHOLD
+    ),
+)
+def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact n-gram Jaccard near-dup pairs: |A∩B| / |A∪B| over per-doc
+    3-word shingle sets (``_shingle_overlap``).  Without the stop-shingle
+    ceiling the Σ df² cost grows super-linearly as common boilerplate
+    accumulates — measured 33 s at x16 -> 314 s at x64 before the cap."""
+    jac = F.round(F.col("c") / (F.col("ca.n") + F.col("cb.n") - F.col("c")), 4)
+    return _shingle_overlap(spark, sf_dir, "jaccard", jac, JACCARD_THRESHOLD)
 
 
 @query(
     "dedup_containment",
-    oracle=f"""
-    WITH {_SHINGLE_CTE},
-    shared AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS c
-      FROM shf a JOIN shf b ON a.s = b.s AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    )
-    SELECT doc_a, doc_b,
-           ROUND(c * 1.0 / LEAST(ca.n, cb.n), 4) AS containment
-    FROM shared
-    JOIN cnt ca ON ca.doc_id = doc_a
-    JOIN cnt cb ON cb.doc_id = doc_b
-    WHERE ROUND(c * 1.0 / LEAST(ca.n, cb.n), 4) >= {CONTAINMENT_THRESHOLD}
-    """,
+    oracle=_shingle_overlap_oracle(
+        "containment", "ROUND(c * 1.0 / LEAST(ca.n, cb.n), 4)", CONTAINMENT_THRESHOLD
+    ),
 )
 def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shingle CONTAINMENT near-dup pairs: |A∩B| / min(|A|, |B|).  Jaccard
@@ -461,38 +396,12 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     the standard metric for sub-document duplication (quotes, boilerplate
     wrappers, chunked re-posts) in corpus curation.
 
-    Same inverted-shingle-index plan as ``dedup_ngram_jaccard`` (blocked
-    self-join on the shingle value, map-side-combined pair counts,
-    SHINGLE_DF_CEILING stop-shingle cap), only the final scoring
-    expression differs — at 100 TB both queries share the Σ df(s)² cost
-    profile, the stop-shingle ceiling, and the AQE skew-split mitigation
-    for hot shingles."""
-    d = _docs_spread(spark, sf_dir)
-    n_part = _pair_parallelism(spark)
-    arrays = _shared_shingle_arrays(d)
-    sh = _blocked_index_from_arrays(arrays, n_part)
-    a, b = sh.alias("a"), sh.alias("b")
-    shared = (
-        _stream_pairs(
-            a.join(
-                b,
-                (F.col("a.s") == F.col("b.s"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            ).select(
-                F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-            )
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    cnt = arrays.select("doc_id", "n")
+    Same inverted-shingle-index plan as ``dedup_ngram_jaccard``
+    (``_shingle_overlap``); only the score differs — at 100 TB both
+    queries share the Σ df(s)² cost profile, the stop-shingle ceiling,
+    and the AQE skew-split mitigation for hot shingles."""
     cont = F.round(F.col("c") / F.least(F.col("ca.n"), F.col("cb.n")), 4)
-    return (
-        shared.join(cnt.alias("ca"), F.col("ca.doc_id") == F.col("doc_a"))
-        .join(cnt.alias("cb"), F.col("cb.doc_id") == F.col("doc_b"))
-        .select("doc_a", "doc_b", cont.alias("containment"))
-        .filter(F.col("containment") >= CONTAINMENT_THRESHOLD)
-    )
+    return _shingle_overlap(spark, sf_dir, "containment", cont, CONTAINMENT_THRESHOLD)
 
 
 WINNOW_K = 25  # character k-gram length
@@ -589,58 +498,24 @@ def winnow_fingerprints(
     )
 
 
-def winnow_capped_fingerprints(
-    fp: DataFrame, n_part: int, ceiling: int = WINNOW_FP_DF_CEILING
-) -> DataFrame:
-    """The pre-checkpoint subtree of ``winnow_pair_counts``: repartition
-    on h, then drop fingerprints with document frequency > ceiling.  The
-    df count is a window COUNT over the same h-partitioning the pair join
-    needs, so the cap costs zero extra exchanges, exactly like
-    ``_blocked_shingle_index`` — pinned by the exchange-count assert in
-    tests/test_plan_shapes.py (the executed query plan truncates at the
-    localCheckpoint, so this subtree is what makes the claim auditable;
-    its dump is the second section of docs/plans/dedup_winnow_spans.txt)."""
-    fp = fp.repartition(n_part, "h")
-    return (
-        fp.withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("h")))
-        .filter(F.col("df") <= ceiling)
-        .select("doc_id", "h")
-    )
-
-
 def winnow_pair_counts(
     fp: DataFrame, n_part: int, ceiling: int = WINNOW_FP_DF_CEILING
 ) -> DataFrame:
     """(doc_a, doc_b, shared_fps) from a (doc_id, h) fingerprint table,
     pre-threshold.  Fingerprints appearing in more than ``ceiling``
     documents are dropped before the self-join (stop-fingerprint rule —
-    see WINNOW_FP_DF_CEILING and ``winnow_capped_fingerprints``)."""
-    fp = winnow_capped_fingerprints(fp, n_part, ceiling)
+    see WINNOW_FP_DF_CEILING): the df window rides the h-repartition the
+    join consumes, so the cap costs zero extra exchanges (pinned by the
+    exchange-count assert in tests/test_plan_shapes.py).  The pair count
+    streams through a pair-keyed exchange at the session width (see
+    operators/pairs._stream_pairs)."""
+    fp = drop_hot_keys(fp.repartition(n_part, "h"), "h", ceiling)
     # The self-join consumes fp twice and Spark has no cross-branch CSE:
     # without a checkpoint the fingerprint-selection stage — the heaviest
     # — would execute twice.  Same pattern as the MinHash band join.
     fp = fp.localCheckpoint(eager=False)
-    a, b = fp.alias("a"), fp.alias("b")
-    pairs = a.join(
-        b, (F.col("a.h") == F.col("b.h")) & (F.col("a.doc_id") < F.col("b.doc_id"))
-    ).select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-    # STREAM the Σ df(h)² pair rows through a pair-keyed exchange and
-    # count on the reduce side (round 10).  A plain groupBy here plans a
-    # map-side partial aggregate in the join stage, and the x256 stage
-    # counters showed what that costs: a pair sharing n fingerprints
-    # lands in ~n DIFFERENT h-partitions, so the partial agg only
-    # combined 2.0G pair rows to 793M (2.5x) while its per-task hash map
-    # exceeded the task's memory share and fell back to sort-based
-    # aggregation — 90.5 GB of memory spill, re-sorting the entire pair
-    # stream (the r9 ledger's #2 item, this round attributed to THIS
-    # stage, not the fingerprint window).  The explicit repartition puts
-    # the exchange BELOW the aggregate instead: the join stage writes
-    # pair rows straight to the shuffle (hash-route, no sort, no map),
-    # and each reduce task counts only its own pairs over an
-    # AQE-coalesced input — bounded state at any corpus size.
-    pairs = pairs.repartition("doc_a", "doc_b")
-    return pairs.groupBy("doc_a", "doc_b").agg(
-        F.count(F.lit(1)).alias("shared_fps")
+    return shared_key_pair_counts(
+        fp, "h", "doc_id", names=("doc_a", "doc_b", "shared_fps")
     )
 
 
@@ -729,16 +604,17 @@ def winnow_hot_pair_counts(
         .withColumn("rep", F.min("doc_id").over(w))
         .filter(F.col("df") > ceiling)
     )
-    # _stream_pairs: a (rep, member) pair repeats once per shared HOT
-    # fingerprint, dispersed across h-partitions — the same no-combine
-    # dispersion as the main pair count, and this path only matters on
-    # exactly the adversarial mass-duplicate inputs where the stream is
-    # large.
+    # _stream_pairs at the 4× width: a (rep, member) pair repeats once
+    # per shared HOT fingerprint, dispersed across h-partitions — the same
+    # no-combine dispersion as the main pair count, and this path only
+    # matters on exactly the adversarial mass-duplicate inputs where the
+    # stream is large.
     return (
         _stream_pairs(
             hot.filter(F.col("doc_id") > F.col("rep")).select(
                 F.col("rep").alias("doc_a"), F.col("doc_id").alias("doc_b")
-            )
+            ),
+            data_ahead_width(fp.sparkSession),
         )
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("shared_hot_fps"))

@@ -450,16 +450,18 @@ def test_winnow_capped_fingerprints_df_window_rides_join_partitioning(spark):
     pre-checkpoint subtree directly — exactly two exchanges total since
     the round-10 shuffle-free fingerprint selection: (doc_id, h) for the
     fingerprint distinct, and h for the repartition the df window and
-    join both ride."""
+    join both ride (the cap as winnow_pair_counts applies it)."""
+    from datafusion_parallelism_spark.operators.pairs import drop_hot_keys
     from datafusion_parallelism_spark.queries.llm import (
-        winnow_capped_fingerprints,
+        WINNOW_FP_DF_CEILING,
         winnow_fingerprints,
     )
 
     d = spark.createDataFrame(
         [(1, "x" * 200), (2, "y" * 500), (3, "x" * 150)], "doc_id long, text string"
     )
-    plan = physical_plan_str(winnow_capped_fingerprints(winnow_fingerprints(d), 32))
+    fp = winnow_fingerprints(d).repartition(32, "h")
+    plan = physical_plan_str(drop_hot_keys(fp, "h", WINNOW_FP_DF_CEILING))
     assert plan.count("Exchange") == 2, plan
     # The df window itself partitions on h and sits above the h-repartition.
     assert "windowspecdefinition(h#" in plan or "windowspecdefinition(h " in plan, plan

@@ -48,8 +48,8 @@ def test_conf_inventory_is_the_reviewed_set():
     package mentions.  A conf that only brings back a superseded
     formulation for an A/B run is a second code path to keep alive; a new
     knob must be added here on purpose.  Surviving confs: the five
-    single-task kernel gates (plans/shaping.KERNEL_GATES) and the two
-    streaming sink settings; env vars: deployment only."""
+    single-task kernel gates (plans/shaping.KERNEL_GATES); env vars:
+    deployment only."""
     import pathlib
     import re
 
@@ -65,7 +65,5 @@ def test_conf_inventory_is_the_reviewed_set():
         "tri_local_max_edges",
         "pq_local_train_max",
         "km_local_train_max",
-        "totals_buckets",
-        "stream_sink",
     }, confs
     assert env == {"SF_DIR", "CPUS", "DRIVER_MEM"}, env

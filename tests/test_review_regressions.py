@@ -64,11 +64,26 @@ def test_connected_components_raises_on_non_convergence(spark):
     # so a short chain now converges even at max_iter=2; a 400-node path is
     # far beyond 2 iterations' reach and must still raise rather than return
     # non-minimal labels.
+    # The raise must come from the driver after a successful job, not from
+    # a kernel task that fails (and is retried) before the driver sees a
+    # wrapped exception: no job of the call may end FAILED.
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(399)], schema="u long, v long"
     )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(chain, max_iter=2)
+    sc = spark.sparkContext
+    group = "cc-non-convergence"
+    sc.setJobGroup(group, "connected_components max_iter=2")
+    try:
+        with pytest.raises(RuntimeError, match="did not converge"):
+            connected_components(chain, max_iter=2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    assert jobs
+    assert all(tracker.getJobInfo(j).status != "FAILED" for j in jobs), [
+        (j, tracker.getJobInfo(j).status) for j in jobs
+    ]
     # and converges fine with enough iterations (log-diameter budget)
     out = connected_components(chain, max_iter=15)
     assert {r.cluster for r in out.collect()} == {0}

@@ -119,9 +119,8 @@ def test_run_to_table_matches_memory_sink_append(spark, sf_dir):
 
 def test_driver_bounded_routes_to_memory_sink(spark, sf_dir):
     """driver_bounded=True (time-range-bounded output) keeps the memory
-    sink — no parquet staging dir is created — and an explicit
-    spark.graft.stream_sink conf overrides the flag, with identical
-    table content either way."""
+    sink — no parquet staging dir is created — while driver_bounded=False
+    stages through parquet, with identical table content either way."""
     import os
     import shutil
 
@@ -137,18 +136,14 @@ def test_driver_bounded_routes_to_memory_sink(spark, sf_dir):
     mem_rows = _rows(t, "hour_start", "event_type")
     assert not os.path.isdir(staged)
     assert mem_rows
-    spark.conf.set("spark.graft.stream_sink", "parquet")
-    try:
-        t2 = run_to_table(
-            hourly_counts_stream(read_events_stream(spark, sf_dir)),
-            name,
-            output_mode="complete",
-            driver_bounded=True,
-        )
-        assert os.path.isdir(staged)
-        assert _rows(t2, "hour_start", "event_type") == mem_rows
-    finally:
-        spark.conf.unset("spark.graft.stream_sink")
+    t2 = run_to_table(
+        hourly_counts_stream(read_events_stream(spark, sf_dir)),
+        name,
+        output_mode="complete",
+        driver_bounded=False,
+    )
+    assert os.path.isdir(staged)
+    assert _rows(t2, "hour_start", "event_type") == mem_rows
 
 
 def test_bucketized_totals_emissions_match_per_user(spark, sf_dir):
